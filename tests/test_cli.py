@@ -64,3 +64,29 @@ def test_cli_ingest_backfill_watchdog(spark, sf_dir, tmp_path, capsys):
     wd = _capture(capsys)
     assert wd["gap_islands"] > 0 and wd["refilled_rows"] > 0
     assert wd["verify_mismatches"] == 0
+
+
+def test_cli_ingest_defaults_to_full_cascade(spark, sf_dir, tmp_path, capsys):
+    from trade_data_collection_service_spark.schema import ROLLUP_MINUTES
+    from trade_data_collection_service_spark.streaming.pipeline import (
+        read_rollup_level,
+        rollup_paths,
+    )
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    candles_with_duplicates(spark, sf_dir).filter(F.col("symbol") == "SYM0").select(
+        *[f.name for f in CANDLE_SCHEMA.fields]
+    ).coalesce(1).write.parquet(src)
+
+    rc = main([
+        "--master", "local[4]",
+        "ingest", "--source", src, "--out", out,
+        "--checkpoint", str(tmp_path / "ckpt"),
+    ])
+    assert rc == 0
+    assert _capture(capsys)["levels"] == ROLLUP_MINUTES
+    paths = rollup_paths(out)
+    assert sorted(paths) == ROLLUP_MINUTES
+    for m, path in paths.items():
+        assert read_rollup_level(spark, path).count() > 0, m

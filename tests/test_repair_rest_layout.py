@@ -91,3 +91,13 @@ def test_layout_partition_pruning_and_compaction(spark, sf_dir):
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_compact_leaves_session_conf_unchanged(spark, sf_dir, tmp_path):
+    # compact's dynamic partition overwrite must be a per-write option:
+    # a leaked session conf turns every later overwrite dynamic
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")  # the Spark default
+    write_candles(candles_with_duplicates(spark, sf_dir), str(tmp_path), mode="overwrite")
+    compact(spark, str(tmp_path), months=["202401"])
+    assert spark.conf.get(key) == "static"

@@ -3,7 +3,9 @@ services (docker-compose.yaml:2-30) as thin argparse wrappers over
 the library operators:
 
 - ``ingest``   = the realtime streamer (app/data_collector.py):
-  file-source candle stream → validate → raw append + rollup cascade.
+  file-source candle stream → validate → raw append + the 1m→1d
+  rollup cascade (every level of ``schema.ROLLUP_MINUTES`` unless
+  ``--minutes`` names a subset).
 - ``backfill`` = the historical loader (app/load_history.py): probe
   earliest stored candles, emit the chunk plan.
 - ``watchdog`` = the quality daemon (app/data_quality_check.py): one
@@ -15,7 +17,8 @@ in shell scripts/cron the way the reference's compose services do.
 
 Usage:
   python -m trade_data_collection_service_spark ingest \\
-      --source DIR --out DIR --checkpoint DIR [--minutes 1,5,15]
+      --source DIR --out DIR --checkpoint DIR \\
+      [--minutes 1,5,15,30,60,120,240,1440]
   python -m trade_data_collection_service_spark backfill \\
       --table DIR --start-date 2024-01-01 --chunk-minutes 720 \\
       --safe-now 2024-02-01 [--out DIR]
@@ -37,12 +40,17 @@ def _spark(app: str, master: str):
 
 
 def cmd_ingest(args: argparse.Namespace) -> dict:
+    from trade_data_collection_service_spark.schema import ROLLUP_MINUTES
     from trade_data_collection_service_spark.streaming.pipeline import (
         start_candle_stream,
     )
 
     spark = _spark("ingest", args.master)
-    minutes = [int(m) for m in args.minutes.split(",")]
+    minutes = (
+        [int(m) for m in args.minutes.split(",")]
+        if args.minutes
+        else list(ROLLUP_MINUTES)
+    )
     q = start_candle_stream(
         spark,
         args.source,
@@ -120,7 +128,9 @@ def build_parser() -> argparse.ArgumentParser:
     pi.add_argument("--source", required=True)
     pi.add_argument("--out", required=True)
     pi.add_argument("--checkpoint", required=True)
-    pi.add_argument("--minutes", default="1,5,15,60,1440")
+    pi.add_argument(
+        "--minutes", help="comma-separated rollup levels (default: all 8)"
+    )
     pi.add_argument("--continuous", action="store_true")
     pi.add_argument("--timeout", type=int, default=0)
     pi.set_defaults(fn=cmd_ingest)

@@ -101,10 +101,12 @@ def compact(spark: SparkSession, path: str, months: list[str] | None = None) -> 
         .partitionBy("month")
         .parquet(stage)
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # per-write option, not a session conf: see
+    # streaming.pipeline._publish_stage
     (
         spark.read.parquet(stage)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("month")
         .parquet(path)
     )

@@ -280,16 +280,14 @@ def start_candle_stream(
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    watermark: str = "10 minutes",
     available_now: bool = True,
     minutes: list[int] | None = None,
     writer=None,
 ):
     """File-source candle stream → validate → foreachBatch(write raw
-    via the pluggable sink + maintain cascade).  ``watermark`` is
-    retained as a declared lateness bound for documentation/
-    monitoring; correctness does not depend on it (see module
-    docstring).
+    via the pluggable sink + maintain cascade).  There is no watermark:
+    correctness does not depend on a lateness bound (see module
+    docstring and the comment below).
 
     ``writer`` is a ``sinks.CandleWriter`` — default ParquetCandleWriter
     (append + dedup-on-read); SqlUpsertCandleWriter is the external-
