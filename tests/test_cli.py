@@ -4,6 +4,7 @@ summary."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from trade_data_collection_service_spark.__main__ import main
@@ -90,3 +91,14 @@ def test_cli_ingest_defaults_to_full_cascade(spark, sf_dir, tmp_path, capsys):
     assert sorted(paths) == ROLLUP_MINUTES
     for m, path in paths.items():
         assert read_rollup_level(spark, path).count() > 0, m
+
+
+def test_cli_ingest_rejects_levels_not_dividing_a_day(tmp_path, capsys):
+    with pytest.raises(SystemExit) as e:
+        main([
+            "ingest", "--source", str(tmp_path / "src"), "--out", str(tmp_path / "out"),
+            "--checkpoint", str(tmp_path / "ckpt"), "--minutes", "1,7",
+        ])
+    assert e.value.code == 2
+    assert "do not divide a day" in capsys.readouterr().err
+    assert not (tmp_path / "out").exists()

@@ -9,9 +9,10 @@ still does.  ADVICE r9: a failed __spark_entry__ import must FAIL the
 gate, not fall back to a hardcoded (stale) surface size.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from sweep_gate import _blocking_dirt, _expected_total  # noqa: E402
 

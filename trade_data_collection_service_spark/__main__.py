@@ -46,11 +46,7 @@ def cmd_ingest(args: argparse.Namespace) -> dict:
     )
 
     spark = _spark("ingest", args.master)
-    minutes = (
-        [int(m) for m in args.minutes.split(",")]
-        if args.minutes
-        else list(ROLLUP_MINUTES)
-    )
+    minutes = args.minutes or list(ROLLUP_MINUTES)
     q = start_candle_stream(
         spark,
         args.source,
@@ -119,6 +115,16 @@ def cmd_watchdog(args: argparse.Namespace) -> dict:
     }
 
 
+def _levels(text: str) -> list[int]:
+    """``--minutes`` value: comma-separated levels, each dividing a day."""
+    from trade_data_collection_service_spark.schema import check_day_levels
+
+    try:
+        return check_day_levels([int(m) for m in text.split(",")])
+    except ValueError as e:
+        raise argparse.ArgumentTypeError(str(e)) from None
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="trade_data_collection_service_spark")
     p.add_argument("--master", default="local[*]")
@@ -129,7 +135,9 @@ def build_parser() -> argparse.ArgumentParser:
     pi.add_argument("--out", required=True)
     pi.add_argument("--checkpoint", required=True)
     pi.add_argument(
-        "--minutes", help="comma-separated rollup levels (default: all 8)"
+        "--minutes",
+        type=_levels,
+        help="comma-separated rollup levels, each dividing 1440 (default: all 8)",
     )
     pi.add_argument("--continuous", action="store_true")
     pi.add_argument("--timeout", type=int, default=0)

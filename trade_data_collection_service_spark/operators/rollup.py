@@ -32,11 +32,25 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trade_data_collection_service_spark.functions.timeutil import bucket_start
 from trade_data_collection_service_spark.schema import ROLLUP_MINUTES, cascade_specs
+
+
+def _raw_aggs() -> list[Column]:
+    """The rollup columns aggregated from deduped 1m candles."""
+    return [
+        F.min_by("open", "start").alias("open"),
+        F.min("start").alias("open_time"),
+        F.max("high").alias("high"),
+        F.min("low").alias("low"),
+        F.max_by("close", "start").alias("close"),
+        F.max("start").alias("close_time"),
+        F.round(F.sum("volume"), 6).alias("volume"),
+        F.sum(F.col("trades").cast("long")).alias("trades"),
+    ]
 
 
 def rollup_raw(df: DataFrame, minutes: int) -> DataFrame:
@@ -47,22 +61,44 @@ def rollup_raw(df: DataFrame, minutes: int) -> DataFrame:
     same code path for streaming foreachBatch and batch repair, as in
     the reference.
     """
+    return df.groupBy(
+        "exchange",
+        "symbol",
+        bucket_start("start", minutes).alias("candle_start"),
+    ).agg(*_raw_aggs())
+
+
+def rollup_levels(df: DataFrame, minutes: list[int]) -> DataFrame:
+    """Every level of ``minutes`` straight from deduped 1m candles, in
+    ONE aggregation: each candle is exploded into one
+    ``(level, candle_start)`` key per level and grouped once with
+    ``rollup_raw``'s aggregates.  Returns the rollup rows with a
+    leading ``level`` column (bucket width in minutes).
+
+    Equal to ``cascade`` level by level (the exactness invariant
+    above), but one shuffle and one plan instead of a chain of
+    aggregations; used where all levels are needed for a small slice
+    of raw, such as the touched days of a micro-batch."""
+    keys = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(m).alias("level"),
+                    bucket_start("start", m).alias("candle_start"),
+                )
+                for m in minutes
+            ]
+        )
+    )
     return (
-        df.groupBy(
+        df.withColumn("__k", keys)
+        .groupBy(
+            F.col("__k.level").alias("level"),
             "exchange",
             "symbol",
-            bucket_start("start", minutes).alias("candle_start"),
+            F.col("__k.candle_start").alias("candle_start"),
         )
-        .agg(
-            F.min_by("open", "start").alias("open"),
-            F.min("start").alias("open_time"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "start").alias("close"),
-            F.max("start").alias("close_time"),
-            F.round(F.sum("volume"), 6).alias("volume"),
-            F.sum(F.col("trades").cast("long")).alias("trades"),
-        )
+        .agg(*_raw_aggs())
     )
 
 

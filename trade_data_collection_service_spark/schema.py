@@ -94,6 +94,26 @@ def cascade_specs(minutes: list[int] | None = None) -> list[RollupSpec]:
     return specs
 
 
+DAY_MINUTES = 1440
+
+
+def check_day_levels(minutes: list[int]) -> list[int]:
+    """Validate levels for a cascade maintained one UTC day at a time.
+
+    Beyond ``cascade_specs``' divisibility, every level must divide a
+    day: only then does each bucket lie inside one UTC day, so that
+    recomputing the touched days recomputes every touched bucket
+    whole.  Raises ``ValueError`` otherwise; returns ``minutes``."""
+    cascade_specs(minutes)
+    bad = [m for m in minutes if DAY_MINUTES % m]
+    if bad:
+        raise ValueError(
+            f"rollup levels {bad} do not divide a day ({DAY_MINUTES} minutes)"
+            " — their buckets would straddle UTC midnight"
+        )
+    return minutes
+
+
 # Raw candle schema — Spark twin of clickhouse_schema.py:123-147.
 CANDLE_SCHEMA = T.StructType(
     [

@@ -11,17 +11,17 @@ rollups fresh.  The Spark-native shape (SURVEY.md §7 step 7):
              model — last-write-wins resolved on read, see below)
            recompute every rollup bucket touched by the batch (T4)
 
-The batch-core functions (validate / dedup_latest / rollup_raw /
-rollup_reagg) ARE the streaming logic — foreachBatch wraps them, so
+The batch-core functions (validate / dedup_latest / rollup_levels)
+ARE the streaming logic — foreachBatch wraps them, so
 streaming and repair compute identical results (mirrors the reference
 reusing the same SELECT for MV and backfill, clickhouse_schema.py:189-206
 vs data_quality_check.py:375-390).
 
 Exactly-once: the checkpoint replays an in-flight batch after a
 crash; both sinks are idempotent — the raw append is deduped on read
-(A9) or compaction, and the rollup upsert overwrites whole
-(exchange, symbol, candle_start) keys for the affected buckets, so a
-replay converges to the same table (SURVEY.md §7 "hard parts").
+(A9) or compaction, and the rollup upsert recomputes whole
+(exchange, symbol, UTC day) slices of every level, so a replay
+converges to the same table (SURVEY.md §7 "hard parts").
 
 Why foreachBatch and not a stateful windowed agg: the rollup cascade
 must serve reads of EVERY intermediate level (1m..1d), and repairs
@@ -29,32 +29,59 @@ must be able to rewrite history far past any watermark.  Keeping the
 levels as tables updated per micro-batch — incremental-MV style —
 matches the reference's semantics exactly; an in-engine stateful agg
 would hold 1d windows open in state for a day and still need the
-repair path.  State here is bounded by the batch's touched buckets,
+repair path.  State here is bounded by the batch's touched days,
 not by window width.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from trade_data_collection_service_spark.functions.timeutil import bucket_start, yyyymm
+from trade_data_collection_service_spark.functions.timeutil import yyyymm
 from trade_data_collection_service_spark.operators.dedup import dedup_latest
-from trade_data_collection_service_spark.operators.rollup import (
-    rollup_raw,
-    rollup_reagg,
-)
+from trade_data_collection_service_spark.operators.rollup import rollup_levels
 from trade_data_collection_service_spark.operators.validate import validate
 from trade_data_collection_service_spark.schema import (
+    CANDLE_SCHEMA,
+    DAY_MINUTES,
     ROLLUP_MINUTES,
+    ROLLUP_SCHEMA,
     cascade_specs,
+    check_day_levels,
 )
 
+# A level table's files as stored: the rollup columns plus the month
+# partition.  Reading with it skips the footer-reading schema
+# inference job that every schema-less read pays.
+_LEVEL_FILE_SCHEMA = T.StructType(
+    [*ROLLUP_SCHEMA.fields, T.StructField("month", T.StringType())]
+)
+_DAY_S = DAY_MINUTES * 60
 
-def rollup_paths(base_dir: str) -> dict[int, str]:
-    return {s.minutes: os.path.join(base_dir, s.table) for s in cascade_specs()}
+
+def rollup_paths(base_dir: str, minutes: list[int] | None = None) -> dict[int, str]:
+    return {s.minutes: os.path.join(base_dir, s.table) for s in cascade_specs(minutes)}
+
+
+def _utc_day(col: str) -> Column:
+    """Days since the epoch of a timestamp column (UTC day number)."""
+    return F.floor(F.unix_timestamp(col) / _DAY_S)
+
+
+def _day_month(day: int) -> str:
+    """The ``yyyymm`` month partition holding UTC day number ``day``."""
+    return dt.datetime.fromtimestamp(day * _DAY_S, dt.timezone.utc).strftime("%Y%m")
+
+
+def _read_level(spark: SparkSession, path: str) -> DataFrame:
+    """A level table (or its stage) with its ``month`` partition column."""
+    return spark.read.schema(_LEVEL_FILE_SCHEMA).parquet(path)
 
 
 def _fs_for(spark: SparkSession, path: str):
@@ -92,7 +119,7 @@ def _publish_stage(spark: SparkSession, stage: str, path: str) -> None:
     session (and under dynamic mode the committer skips the _SUCCESS
     marker the stage WAL relies on)."""
     (
-        spark.read.parquet(stage)
+        _read_level(spark, stage)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("month")
@@ -136,8 +163,7 @@ def _recover_stage(spark: SparkSession, stage: str, path: str) -> None:
 def read_rollup_level(spark: SparkSession, path: str) -> DataFrame:
     """Read a rollup level table, hiding the physical ``month``
     partition column (layout detail, not part of the rollup schema)."""
-    df = spark.read.parquet(path)
-    return df.drop("month") if "month" in df.columns else df
+    return _read_level(spark, path).drop("month")
 
 
 def upsert_rollup_levels(
@@ -149,115 +175,121 @@ def upsert_rollup_levels(
 ) -> None:
     """Incrementally maintain the rollup cascade for one micro-batch.
 
-    Exactness under replays AND arbitrarily-late duplicates: each
-    level's touched buckets are RECOMPUTED from the (deduped) level
-    below, never merged additively — an additive merge of a stored
-    bucket with a late re-delivery of an already-counted candle would
-    double-count volume/trades.  Recomputation makes the whole
-    pipeline idempotent: checkpoint replays and duplicate appends
-    converge to the same tables (the reference gets this from
-    ReplacingMergeTree dedup + watchdog recompute,
-    data_quality_check.py:391-485; we get it in-line).
+    Exactness under replays AND arbitrarily-late duplicates: the
+    touched buckets are RECOMPUTED from the deduped raw rows, never
+    merged additively — an additive merge of a stored bucket with a
+    late re-delivery of an already-counted candle would double-count
+    volume/trades.  Recomputation makes the whole pipeline idempotent:
+    checkpoint replays and duplicate appends converge to the same
+    tables (the reference gets this from ReplacingMergeTree dedup +
+    watchdog recompute, data_quality_check.py:391-485; we get it
+    in-line).
 
-    Work per batch is O(touched buckets) compute and O(touched month
-    partitions) I/O, independent of history:
-    - level 1m reads the deduped raw rows for the batch's buckets
-      (partition pruning + sorted row groups make this a point read);
-    - level N reads the level-N-1 table rows covering its touched
-      buckets (a coarser, smaller key set each step);
+    The unit of work is the touched ``(exchange, symbol, UTC day)``.
+    Every level divides a day (``check_day_levels``), so every touched
+    bucket of every level lies inside a touched day, and one batch
+    costs a fixed number of Spark jobs whatever its size or the
+    number of levels it feeds:
+
+    - the touched days are collected once (a handful of keys);
+    - the raw rows of those days are read once and deduplicated — the
+      day filter commutes with ``dedup_latest`` because ``start`` is
+      part of the dedup key.  Raw is not partitioned, so this is a
+      scan of raw narrowed by the parquet ``start`` statistics of the
+      touched day range, then a broadcast semi-join;
+    - every level's buckets of those days come out of ONE aggregation
+      (``rollup_levels``), equal to the cascade;
     - each level table is stored ``partitionBy(month)`` (the
-      reference's toYYYYMM partitioning, clickhouse_schema.py:144) and
-      only the month partitions containing touched buckets are
-      rewritten, via dynamic partition overwrite — untouched history
-      is never read or written.
+      reference's toYYYYMM partitioning, clickhouse_schema.py:144), and
+      only the months holding touched days are rewritten.  Their new
+      contents, for all levels at once, are the stored rows of those
+      months (a partition-pruned read) outside the touched days plus
+      the recomputed rows, laid out one task per (level, month) and
+      checkpointed once, so no later write reads a table being
+      replaced.
 
-    Publish protocol per level: the touched months' new contents
-    (kept untouched buckets + recomputed buckets) are first
-    materialized to a sibling ``.stage`` directory, then written into
-    the live table with ``partitionOverwriteMode=dynamic``.  The stage
-    step is deliberate: it removes the read-from/write-to-same-path
-    hazard, and a crash before the publish leaves the live table
-    untouched (the checkpoint replays the batch).  A crash *during*
-    the publish job-commit is bounded to the touched month partitions,
-    which the replayed batch fully rewrites from the stage inputs
-    recomputed off the (idempotent, append-only) raw table — so replay
-    still converges.  On a transactional table format (Delta/Iceberg)
-    the publish becomes a single replaceWhere commit.
+    Publish protocol per level: the touched months' new contents are
+    first materialized to a sibling ``.stage`` directory, then written
+    into the live table with ``partitionOverwriteMode=dynamic``.  A
+    crash before the publish leaves the live table untouched (the
+    checkpoint replays the batch).  A crash *during* the publish
+    job-commit is bounded to the touched month partitions, and the
+    completed stage (``_SUCCESS``) is the write-ahead record that
+    ``_recover_stage`` rolls forward on the next call, before anything
+    reads the live table — so replay still converges.  On a
+    transactional table format (Delta/Iceberg) the publish becomes a
+    single replaceWhere commit.
+
+    Assumes the session time zone is UTC (``session.get_spark``), as
+    month partitions are named from UTC days.
     """
-    minutes = minutes or ROLLUP_MINUTES
-    paths = rollup_paths(base_dir)
-    bucket_keys = ["exchange", "symbol", "candle_start"]
+    minutes = check_day_levels(minutes or ROLLUP_MINUTES)
+    paths = rollup_paths(base_dir, minutes)
+    # Replay safety: finish (or discard) any interrupted publish from
+    # a crashed previous run before reading the live tables.
+    for m in minutes:
+        _recover_stage(spark, paths[m] + ".stage", paths[m])
 
-    # Touched 1m buckets from this batch.
+    day_keys = ["exchange", "symbol", "__day"]
     touched = (
-        batch_1m.select(
-            "exchange",
-            "symbol",
-            bucket_start("start", minutes[0]).alias("candle_start"),
-        )
+        batch_1m.select("exchange", "symbol", _utc_day("start").alias("__day"))
         .distinct()
-        .cache()
+        .collect()
     )
-    source = None  # level below's full (fresh) table
-    for i, m in enumerate(minutes):
-        path = paths[m]
-        # Replay safety: finish (or discard) any interrupted publish
-        # from a crashed previous run before reading the live table.
-        _recover_stage(spark, path + ".stage", path)
-        # Coarsen the touched-bucket set to this level's grid.
-        prev_touched = touched
-        touched = (
-            prev_touched.select(
-                "exchange",
-                "symbol",
-                bucket_start("candle_start", m).alias("candle_start"),
-            ).distinct()
-        ).cache()
-        if i == 0:
-            raw_df = (
-                raw_path
-                if isinstance(raw_path, DataFrame)
-                else spark.read.parquet(raw_path)
-            )
-            raw = dedup_latest(raw_df)
-            rows = raw.join(
-                F.broadcast(touched).withColumnRenamed("candle_start", "start"),
-                ["exchange", "symbol", "start"],
-                "left_semi",
-            )
-            recomputed = rollup_raw(rows, m)
-        else:
-            # covering join expressed as semi-join on the coarse bucket
-            rows = source.withColumn(
-                "__cb", bucket_start("candle_start", m)
-            ).join(
-                F.broadcast(touched.withColumnRenamed("candle_start", "__cb")),
-                ["exchange", "symbol", "__cb"],
-                "left_semi",
-            ).drop("__cb")
-            recomputed = rollup_reagg(rows, m)
-        if table_exists(spark, path):
-            # Rewrite ONLY month partitions containing touched buckets:
-            # within those months, keep the untouched buckets' stored
-            # rows and splice in the recomputed ones.
-            touched_months = (
-                touched.select(yyyymm("candle_start").alias("month")).distinct()
-            )
-            stored = read_rollup_level(spark, path)
-            keep = (
-                stored.withColumn("month", yyyymm("candle_start"))
-                .join(F.broadcast(touched_months), ["month"], "left_semi")
-                .drop("month")
-                .join(F.broadcast(touched), bucket_keys, "left_anti")
-            )
-            out = keep.unionByName(recomputed)
-        else:
-            out = recomputed
-        stage = path + ".stage"
+    if not touched:
+        return
+    days = sorted({r["__day"] for r in touched})
+    months = sorted({_day_month(d) for d in days})
+    keys = F.broadcast(
+        spark.createDataFrame(touched, "exchange string, symbol string, __day long")
+    )
+
+    raw = (
+        raw_path
+        if isinstance(raw_path, DataFrame)
+        else spark.read.schema(CANDLE_SCHEMA).parquet(raw_path)
+    )
+    rows = dedup_latest(
+        raw.filter(
+            (F.col("start") >= F.timestamp_seconds(F.lit(days[0] * _DAY_S)))
+            & (F.col("start") < F.timestamp_seconds(F.lit((days[-1] + 1) * _DAY_S)))
+        )
+        .withColumn("__day", _utc_day("start"))
+        .join(keys, day_keys, "left_semi")
+        .drop("__day")
+    )
+    new = rollup_levels(rows, minutes)
+    stored = [
+        _read_level(spark, paths[m])
+        .filter(F.col("month").isin(months))
+        .select(F.lit(m).alias("level"), *ROLLUP_SCHEMA.fieldNames())
+        for m in minutes
+        if table_exists(spark, paths[m])
+    ]
+    if stored:
+        kept = (
+            reduce(DataFrame.unionByName, stored)
+            .withColumn("__day", _utc_day("candle_start"))
+            .join(keys, day_keys, "left_anti")
+            .drop("__day")
+        )
+        new = new.unionByName(kept)
+    # One task per (level, month), so each month is one file.  `month`
+    # leads the sort because the partitioned write needs month-ordered
+    # input and would otherwise re-sort by month alone, losing the key
+    # order.  The checkpoint cuts the lineage to the live tables that
+    # the loop below replaces.
+    new = (
+        new.withColumn("month", yyyymm("candle_start"))
+        .repartition("level", "month")
+        .sortWithinPartitions("month", "level", "exchange", "symbol", "candle_start")
+        .localCheckpoint()
+    )
+    for m in minutes:
+        path, stage = paths[m], paths[m] + ".stage"
         (
-            out.withColumn("month", yyyymm("candle_start"))
-            .repartition("month")
-            .sortWithinPartitions("exchange", "symbol", "candle_start")
+            new.filter(F.col("level") == m)
+            .drop("level")
             .write.mode("overwrite")
             # static full-dir overwrite: the stage is rebuilt whole,
             # and the static committer writes the _SUCCESS marker that
@@ -268,11 +300,6 @@ def upsert_rollup_levels(
         )
         _publish_stage(spark, stage, path)
         _rm(spark, stage)
-        # `touched` is materialized by the writes above; the finer
-        # level's cache is no longer referenced.
-        prev_touched.unpersist()
-        source = read_rollup_level(spark, path)
-    touched.unpersist()
 
 
 def start_candle_stream(
