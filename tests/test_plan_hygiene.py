@@ -92,7 +92,6 @@ NESTED_LOOP_OK = {
     # 1-row broadcast scalar subqueries (crossJoin(broadcast(agg)) — the
     # no-collect scalar idiom, VERDICT r1 item 7) plan as a Cross BNLJ
     # with a single-row build side:
-    "freshness",
     "readme_window",
     "tpch_q22",
     "tpch_q15",  # 1-row max-revenue broadcast scalar

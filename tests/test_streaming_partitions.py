@@ -27,6 +27,8 @@ from trade_data_collection_service_spark.streaming.pipeline import (
 )
 
 LEVELS = [1, 5, 1440]
+# the one stage every level's new months are written to before publish
+STAGE = "_rollup.stage"
 UTC = dt.timezone.utc
 
 
@@ -138,6 +140,8 @@ def _assert_converged(spark, raw_path, dirs):
         assert stored.exceptAll(expected[m]).count() == 0
         assert expected[m].exceptAll(stored).count() == 0
         assert not table_exists(spark, paths[m] + ".stage")
+        assert not [d for d in os.listdir(paths[m]) if d.startswith(".month=")]
+    assert not table_exists(spark, os.path.join(dirs, STAGE))
 
 
 def test_multi_month_batch_touches_only_its_months(spark):
@@ -225,12 +229,15 @@ def test_replay_after_crash_between_stage_and_publish(spark, monkeypatch):
         def crash_publish(spark_, stage, path):
             raise RuntimeError("injected crash: publish never ran")
 
+        paths = rollup_paths(dirs)
+        before = {m: _snapshot(paths[m]) for m in LEVELS}
         monkeypatch.setattr(P, "_publish_stage", crash_publish)
         with pytest.raises(RuntimeError, match="injected crash"):
             upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
-        # crash state: level-1m stage is fully written, live untouched
-        paths = rollup_paths(dirs)
-        assert table_exists(spark, paths[LEVELS[0]] + ".stage/_SUCCESS")
+        # crash state: the stage is fully written, every live level untouched
+        assert table_exists(spark, os.path.join(dirs, STAGE, "_SUCCESS"))
+        for m in LEVELS:
+            assert _snapshot(paths[m]) == before[m], f"level {m} changed before publish"
 
         monkeypatch.setattr(P, "_publish_stage", real_publish)
         upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
@@ -301,3 +308,114 @@ def test_replay_after_crash_mid_publish_commit(spark, monkeypatch):
         assert stored.filter("symbol = 'ETH-USDT'").count() == 20
     finally:
         shutil.rmtree(dirs, ignore_errors=True)
+
+
+def _crash_at_publish(spark, monkeypatch, dirs, publish):
+    """Seed a two-symbol Jan+Feb store, append a one-candle Feb
+    revision to raw, and run its upsert with ``_publish_stage``
+    replaced by ``publish(real_publish, stage, path)``, which must
+    raise.  Returns the raw path and the batch to replay."""
+    import trade_data_collection_service_spark.streaming.pipeline as P
+
+    raw_path = os.path.join(dirs, "candles_raw")
+    jan = dt.datetime(2024, 1, 10, 12, 0, tzinfo=UTC)
+    feb = dt.datetime(2024, 2, 20, 9, 30, tzinfo=UTC)
+    batch1 = spark.createDataFrame(
+        [
+            _candle(sym, t0 + dt.timedelta(minutes=i), p + i)
+            for sym, p in (("BTC-USDT", 100.0), ("ETH-USDT", 50.0))
+            for t0 in (jan, feb)
+            for i in range(20)
+        ],
+        CANDLE_SCHEMA,
+    )
+    batch1.write.mode("append").parquet(raw_path)
+    upsert_rollup_levels(spark, raw_path, batch1, dirs, LEVELS)
+
+    batch2 = spark.createDataFrame(
+        [_candle("BTC-USDT", feb + dt.timedelta(minutes=3), 999.0, version=5)],
+        CANDLE_SCHEMA,
+    )
+    batch2.write.mode("append").parquet(raw_path)
+    real_publish = P._publish_stage
+    monkeypatch.setattr(
+        P, "_publish_stage", lambda spark_, stage, path: publish(real_publish, stage, path)
+    )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
+    monkeypatch.setattr(P, "_publish_stage", real_publish)
+    assert table_exists(spark, os.path.join(dirs, STAGE, "_SUCCESS"))
+    return raw_path, batch2
+
+
+def _crash(real_publish, stage, path):
+    raise RuntimeError("injected crash")
+
+
+def test_replay_after_crash_between_levels(spark, monkeypatch, tmp_path):
+    """The first level's months are live, the other levels' months are
+    still staged; replay moves the rest in and converges."""
+    dirs = str(tmp_path)
+    paths = rollup_paths(dirs)
+    published = []
+
+    def first_level_only(real_publish, stage, path):
+        if published:
+            raise RuntimeError("injected crash")
+        published.append(path)
+        real_publish(spark, stage, path)
+
+    raw_path, batch2 = _crash_at_publish(spark, monkeypatch, dirs, first_level_only)
+    assert published == [paths[LEVELS[0]]]
+    feb = os.path.join(STAGE, "level={}", "month=202402")
+    assert not os.path.exists(os.path.join(dirs, feb.format(LEVELS[0])))
+    for m in LEVELS[1:]:
+        assert os.path.isdir(os.path.join(dirs, feb.format(m)))
+
+    upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
+    _assert_converged(spark, raw_path, dirs)
+
+
+def test_replay_after_crash_with_month_moved_aside(spark, monkeypatch, tmp_path):
+    """The live Feb month of the 1m level was renamed aside and its
+    staged replacement never moved in: the level has no Feb at all
+    until replay moves the staged month in."""
+    dirs = str(tmp_path)
+    raw_path, batch2 = _crash_at_publish(spark, monkeypatch, dirs, _crash)
+    level_dir = rollup_paths(dirs)[LEVELS[0]]
+    os.rename(
+        os.path.join(level_dir, "month=202402"), os.path.join(level_dir, ".month=202402.old")
+    )
+    stored = read_rollup_level(spark, level_dir)
+    assert stored.filter("candle_start >= '2024-02-01'").count() == 0
+
+    upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
+    _assert_converged(spark, raw_path, dirs)
+
+
+def test_leftover_aside_is_hidden_and_removed(spark, monkeypatch, tmp_path):
+    """A crash between moving the staged month in and deleting the
+    aside leaves ``.month=YYYYMM.old`` beside the new month.  Spark and
+    the benchmark oracle's pyarrow read both skip it, and replay
+    deletes it."""
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+    import oracle
+
+    dirs = str(tmp_path)
+    raw_path, batch2 = _crash_at_publish(spark, monkeypatch, dirs, _crash)
+    paths = rollup_paths(dirs)
+    level_dir = paths[LEVELS[0]]
+    live = os.path.join(level_dir, "month=202402")
+    aside = os.path.join(level_dir, ".month=202402.old")
+    os.rename(live, aside)
+    os.rename(os.path.join(dirs, STAGE, f"level={LEVELS[0]}", "month=202402"), live)
+
+    expected = cascade(dedup_latest(spark.read.parquet(raw_path)), LEVELS)[LEVELS[0]]
+    stored = read_rollup_level(spark, level_dir)
+    assert stored.exceptAll(expected).count() == 0
+    assert expected.exceptAll(stored).count() == 0
+    assert len(oracle.read_table(level_dir)) == expected.count()
+
+    upsert_rollup_levels(spark, raw_path, batch2, dirs, LEVELS)
+    assert not os.path.exists(aside)
+    _assert_converged(spark, raw_path, dirs)

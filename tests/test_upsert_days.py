@@ -30,10 +30,10 @@ from trade_data_collection_service_spark.streaming.pipeline import (
 
 UTC = dt.timezone.utc
 SYMBOLS = ("BTC-USDT", "ETH-USDT")
-# The fixed job budget of one upsert, whatever the batch size: a few
-# jobs for the touched keys and the checkpoint, plus a stage write and
-# a publish per level.
-MAX_JOBS = 2 * len(ROLLUP_MINUTES) + 10
+# The fixed job budget of one upsert, whatever the batch size and the
+# number of levels: the touched keys, the stage write's shuffles and
+# the write itself (7 measured); the publish renames run no job.
+MAX_JOBS = 10
 
 
 def _minutes(t0: dt.datetime, n: int, price: float, symbols=SYMBOLS):
@@ -71,6 +71,7 @@ def _assert_levels_match_cascade(spark, raw_path, base):
         assert stored.exceptAll(expected[m]).count() == 0, f"level {m}: extra rows"
         assert expected[m].exceptAll(stored).count() == 0, f"level {m}: missing rows"
         assert not table_exists(spark, paths[m] + ".stage")
+    assert not table_exists(spark, os.path.join(base, "_rollup.stage"))
 
 
 @pytest.fixture
@@ -143,6 +144,21 @@ def test_job_count_does_not_grow_with_the_batch(spark, store):
     assert jobs_row <= MAX_JOBS, jobs_row
     assert jobs_day <= MAX_JOBS, jobs_day
     _assert_levels_match_cascade(spark, raw_path, base)
+
+
+def test_job_count_does_not_grow_with_the_levels(spark, store, tmp_path_factory):
+    """The same batch upserted into a 3-level and into the 8-level
+    store launches the same number of jobs."""
+    base, raw_path = store
+    batch = _append(
+        spark, raw_path, [_candle("ETH-USDT", dt.datetime(2024, 3, 2, 7, 0, tzinfo=UTC), 60.0, 1)]
+    )
+    three = [1, 5, 1440]
+    base3 = str(tmp_path_factory.mktemp("three_levels"))
+    upsert_rollup_levels(spark, raw_path, spark.read.parquet(raw_path), base3, three)
+    jobs3 = _jobs(spark, lambda: upsert_rollup_levels(spark, raw_path, batch, base3, three))
+    jobs8 = _jobs(spark, lambda: upsert_rollup_levels(spark, raw_path, batch, base))
+    assert jobs3 == jobs8 <= MAX_JOBS, (jobs3, jobs8)
 
 
 @pytest.mark.parametrize("levels", [[1, 7], [1, 5, 2880]])

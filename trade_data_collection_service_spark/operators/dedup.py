@@ -35,13 +35,15 @@ def dedup_latest(
     deterministic by additionally ordering on the value columns
     (SURVEY.md §7 "hard parts").
 
-    ``method="agg"`` (default): one hash aggregation taking
+    ``method="agg"`` (default): one aggregation taking
     ``max(struct(version, tiebreakers, payload...))`` — struct
     comparison is lexicographic, so the winner is the max-version row.
-    Scale rationale: Catalyst plans a map-side partial aggregate, so
-    duplicate versions collapse BEFORE the shuffle and nothing is
-    sorted; the window form must shuffle every version and sort each
-    key group.  Requires all non-key columns to be orderable types
+    A ``max`` over a struct has no fixed-width buffer, so Spark cannot
+    run it as a ``HashAggregate``: the plan is a partial and a final
+    ``SortAggregate``, with a ``Sort`` on each side of the shuffle.
+    Scale rationale: the partial aggregate runs map-side, so duplicate
+    versions collapse BEFORE the shuffle; the window form must shuffle
+    every version.  Requires all non-key columns to be orderable types
     (true for the candle schema).
 
     ``method="window"``: row_number over (version desc, tiebreakers

@@ -166,21 +166,14 @@ def listing_stable(candles: DataFrame, split_ts) -> DataFrame:
 def freshness(candles: DataFrame, threshold_minutes: int = 2) -> DataFrame:
     """T5 (data_quality_check.py:111-141): newest stop per symbol, lag
     vs the table's max stop (the deterministic stand-in for now()),
-    stale flag at the 2-minute SLO."""
-    latest = candles.groupBy("symbol").agg(F.max("stop").alias("latest_stop"))
-    now = candles.agg(F.max("stop").alias("now_ts"))
+    stale flag at the 2-minute SLO.  The table's max stop is the max of
+    the per-symbol maxima, taken over an unpartitioned window on the
+    one-row-per-symbol result, so the candles are aggregated once."""
+    now = F.max("latest_stop").over(Window.partitionBy())
     return (
-        latest.crossJoin(F.broadcast(now))
-        .select(
-            "symbol",
-            "latest_stop",
-            (F.unix_timestamp("now_ts") - F.unix_timestamp("latest_stop")).alias(
-                "lag_seconds"
-            ),
-            (
-                (F.unix_timestamp("now_ts") - F.unix_timestamp("latest_stop"))
-                > threshold_minutes * 60
-            ).alias("is_stale"),
-        )
+        candles.groupBy("symbol")
+        .agg(F.max("stop").alias("latest_stop"))
+        .withColumn("lag_seconds", F.unix_timestamp(now) - F.unix_timestamp("latest_stop"))
+        .withColumn("is_stale", F.col("lag_seconds") > threshold_minutes * 60)
         .orderBy("symbol")
     )

@@ -101,8 +101,9 @@ def compact(spark: SparkSession, path: str, months: list[str] | None = None) -> 
         .partitionBy("month")
         .parquet(stage)
     )
-    # per-write option, not a session conf: see
-    # streaming.pipeline._publish_stage
+    # per-write option, not a session conf: a session-wide dynamic
+    # mode leaks into every later write in the session, and under it
+    # the committer skips the _SUCCESS marker that stage WALs rely on
     (
         spark.read.parquet(stage)
         .write.mode("overwrite")

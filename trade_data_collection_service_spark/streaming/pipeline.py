@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -52,6 +53,7 @@ from trade_data_collection_service_spark.schema import (
     DAY_MINUTES,
     ROLLUP_MINUTES,
     ROLLUP_SCHEMA,
+    RollupSpec,
     cascade_specs,
     check_day_levels,
 )
@@ -63,6 +65,10 @@ _LEVEL_FILE_SCHEMA = T.StructType(
     [*ROLLUP_SCHEMA.fields, T.StructField("month", T.StringType())]
 )
 _DAY_S = DAY_MINUTES * 60
+# Where one upsert stages every level's new months before publishing.
+_STAGE = "_rollup.stage"
+# A live month renamed aside while its replacement moves in.
+_ASIDE = re.compile(r"\.month=[^/]+\.old")
 
 
 def rollup_paths(base_dir: str, minutes: list[int] | None = None) -> dict[int, str]:
@@ -107,56 +113,82 @@ def _rm(spark: SparkSession, path: str) -> None:
         fs.delete(hpath, True)
 
 
+def _rename(fs, src, dst) -> None:
+    # Hadoop reports a failed rename by returning false, not raising
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
 def _publish_stage(spark: SparkSession, stage: str, path: str) -> None:
-    """Publish a fully-staged level table into the live path, rewriting
-    only the month partitions present in the stage (dynamic partition
-    overwrite).  Isolated as a function so crash tests can inject a
-    failure at the stage/publish boundary.
+    """Move every ``month=`` directory of one level's stage into the
+    live level table ``path``, without a Spark job.  Isolated as a
+    function so crash tests can inject a failure at the publish.
 
-    The overwrite mode is a per-write OPTION, not a session conf:
-    mutating ``spark.sql.sources.partitionOverwriteMode`` globally
-    leaks dynamic-overwrite semantics into every later write in the
-    session (and under dynamic mode the committer skips the _SUCCESS
-    marker the stage WAL relies on)."""
-    (
-        _read_level(spark, stage)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("month")
-        .parquet(path)
-    )
+    Each month is three steps: rename the live month aside to the
+    hidden ``.month=YYYYMM.old``, rename the staged month in, delete
+    the aside.  Spark and pyarrow skip names starting with ``.``, so a
+    reader sees either month whole; between the two renames the month
+    is briefly absent.  Asides left by an earlier crash, whose staged
+    month was already moved in, are deleted first, which makes a
+    repeated publish of the same stage idempotent."""
+    fs, live_dir = _fs_for(spark, path)
+    fs.mkdirs(live_dir)
+    for st in fs.listStatus(live_dir):
+        if _ASIDE.fullmatch(st.getPath().getName()):
+            fs.delete(st.getPath(), True)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    for st in fs.listStatus(_fs_for(spark, stage)[1]):
+        staged = st.getPath()
+        name = staged.getName()
+        if not name.startswith("month="):
+            continue
+        live, aside = Path(live_dir, name), Path(live_dir, f".{name}.old")
+        replaced = fs.exists(live)
+        # nothing between the two renames: a reader listing the level
+        # in that gap finds the month missing
+        if replaced:
+            _rename(fs, live, aside)
+        _rename(fs, staged, live)
+        if replaced:
+            fs.delete(aside, True)
 
 
-def _recover_stage(spark: SparkSession, stage: str, path: str) -> None:
-    """Roll the publish WAL forward on replay after a crash.
+def _recover_stage(spark: SparkSession, stage: str, base_dir: str) -> None:
+    """Finish or discard the publish of the rollup stage.
 
-    The stage directory is the write-ahead record of the publish: it
-    holds the COMPLETE contents of every touched month partition
-    (kept untouched buckets + recomputed ones) and is only deleted
-    after a successful publish.  On entry, three crash states are
-    possible:
+    The stage (``<base_dir>/_rollup.stage``, laid out
+    ``level=N/month=YYYYMM``) holds the COMPLETE new contents of every
+    touched month of every level (kept untouched buckets + recomputed
+    ones), and its ``_SUCCESS`` marker is the write-ahead record of the
+    publish.  On entry, three states are possible:
 
-    - no stage dir: the previous batch finished (or never staged) —
+    - no stage: the previous batch finished (or never staged) —
       nothing to do;
-    - stage dir WITHOUT ``_SUCCESS``: crash mid-staging; the live
-      table was never touched, so discard the partial stage and let
-      the replayed batch restage from scratch;
-    - stage dir WITH ``_SUCCESS``: crash between stage completion and
-      publish completion.  The live table's touched months may be
-      partially written (a dynamic-overwrite job commit is not atomic
-      on plain parquet), and the kept-untouched-bucket rows for those
-      months exist ONLY in the stage — so republish the stage first,
-      restoring the invariant that the live table is whole, then
-      delete it.  The replayed batch then recomputes the same months
-      idempotently.
+    - stage WITHOUT ``_SUCCESS``: crash mid-write; no live table was
+      touched, so the stage is discarded and the replayed batch
+      restages from scratch;
+    - stage WITH ``_SUCCESS``: crash during the publish.  Some months
+      may already be live, one may sit aside with its replacement
+      still staged, and asides of moved months may remain.  Every
+      staged month left is moved in and the asides are removed
+      (``_publish_stage`` per level), then the stage is deleted.
 
-    Without this roll-forward, replay-after-mid-publish-crash could
-    lose untouched buckets in touched months: the replay's keep-set is
-    read from the (damaged) live table."""
+    Only the stage holds the kept-untouched-bucket rows of a month
+    whose live copy was moved aside, so rolling forward, not
+    discarding, is what keeps replay exact: the replayed batch reads
+    its keep-set from the live tables."""
     if not table_exists(spark, stage):
         return
     if table_exists(spark, stage + "/_SUCCESS"):
-        _publish_stage(spark, stage, path)
+        fs, hstage = _fs_for(spark, stage)
+        levels = sorted(
+            int(name[len("level="):])
+            for name in (st.getPath().getName() for st in fs.listStatus(hstage))
+            if name.startswith("level=")
+        )
+        for m in levels:
+            table = os.path.join(base_dir, RollupSpec(m, m).table)
+            _publish_stage(spark, f"{stage}/level={m}", table)
     _rm(spark, stage)
 
 
@@ -204,31 +236,31 @@ def upsert_rollup_levels(
       only the months holding touched days are rewritten.  Their new
       contents, for all levels at once, are the stored rows of those
       months (a partition-pruned read) outside the touched days plus
-      the recomputed rows, laid out one task per (level, month) and
-      checkpointed once, so no later write reads a table being
-      replaced.
+      the recomputed rows, written by ONE job into the stage
+      ``<base_dir>/_rollup.stage``, partitioned by ``(level, month)``
+      with one task and one file per (level, month).
 
-    Publish protocol per level: the touched months' new contents are
-    first materialized to a sibling ``.stage`` directory, then written
-    into the live table with ``partitionOverwriteMode=dynamic``.  A
-    crash before the publish leaves the live table untouched (the
-    checkpoint replays the batch).  A crash *during* the publish
-    job-commit is bounded to the touched month partitions, and the
-    completed stage (``_SUCCESS``) is the write-ahead record that
-    ``_recover_stage`` rolls forward on the next call, before anything
-    reads the live table — so replay still converges.  On a
-    transactional table format (Delta/Iceberg) the publish becomes a
-    single replaceWhere commit.
+    Publish protocol: the stage write is static-overwrite, so its
+    ``_SUCCESS`` marker appears only once every level's months are
+    complete; no live table changes before then, so a crash leaves the
+    live tables untouched and the checkpoint replays the batch.  Then
+    each level's staged months are renamed into the live table
+    (``_publish_stage``: live month aside, staged month in, aside
+    deleted) and the stage is deleted.  A crash during the publish
+    leaves a ``_SUCCESS``-marked stage, which ``_recover_stage`` rolls
+    forward on the next call, before anything reads the live tables —
+    so replay still converges.  On a transactional table format
+    (Delta/Iceberg) the publish becomes a single replaceWhere commit.
 
     Assumes the session time zone is UTC (``session.get_spark``), as
     month partitions are named from UTC days.
     """
     minutes = check_day_levels(minutes or ROLLUP_MINUTES)
     paths = rollup_paths(base_dir, minutes)
+    stage = os.path.join(base_dir, _STAGE)
     # Replay safety: finish (or discard) any interrupted publish from
     # a crashed previous run before reading the live tables.
-    for m in minutes:
-        _recover_stage(spark, paths[m] + ".stage", paths[m])
+    _recover_stage(spark, stage, base_dir)
 
     day_keys = ["exchange", "symbol", "__day"]
     touched = (
@@ -274,32 +306,24 @@ def upsert_rollup_levels(
             .drop("__day")
         )
         new = new.unionByName(kept)
-    # One task per (level, month), so each month is one file.  `month`
-    # leads the sort because the partitioned write needs month-ordered
-    # input and would otherwise re-sort by month alone, losing the key
-    # order.  The checkpoint cuts the lineage to the live tables that
-    # the loop below replaces.
-    new = (
+    # One task per (level, month), so each month is one file.  The
+    # partition columns lead the sort, which satisfies the partitioned
+    # writer, so it does not re-sort and the key order survives.
+    (
         new.withColumn("month", yyyymm("candle_start"))
         .repartition("level", "month")
-        .sortWithinPartitions("month", "level", "exchange", "symbol", "candle_start")
-        .localCheckpoint()
+        .sortWithinPartitions("level", "month", "exchange", "symbol", "candle_start")
+        .write.mode("overwrite")
+        # static full-dir overwrite: the stage is rebuilt whole, and
+        # the static committer writes the _SUCCESS marker that
+        # _recover_stage uses as the staged-complete WAL record
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("level", "month")
+        .parquet(stage)
     )
-    for m in minutes:
-        path, stage = paths[m], paths[m] + ".stage"
-        (
-            new.filter(F.col("level") == m)
-            .drop("level")
-            .write.mode("overwrite")
-            # static full-dir overwrite: the stage is rebuilt whole,
-            # and the static committer writes the _SUCCESS marker that
-            # _recover_stage uses as the staged-complete WAL record
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("month")
-            .parquet(stage)
-        )
-        _publish_stage(spark, stage, path)
-        _rm(spark, stage)
+    # The stage is complete: publishing it is the roll-forward that
+    # recovery runs after a crash.
+    _recover_stage(spark, stage, base_dir)
 
 
 def start_candle_stream(
@@ -373,6 +397,9 @@ def start_candle_stream(
 def freshness_report(spark: SparkSession, out_dir: str, threshold_minutes: int = 2) -> DataFrame:
     """T5 freshness monitor over the streamed raw table."""
     from trade_data_collection_service_spark.operators.queries import freshness
+    from trade_data_collection_service_spark.streaming.sinks import (
+        ParquetCandleWriter,
+    )
 
-    raw = spark.read.parquet(os.path.join(out_dir, "candles_raw"))
+    raw = ParquetCandleWriter(out_dir).read_raw(spark)
     return freshness(dedup_latest(raw), threshold_minutes)
